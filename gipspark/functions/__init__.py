@@ -3,7 +3,8 @@
 Three families, split by where they execute:
 
 - :mod:`gipspark.functions.text` — HTML text extraction + geotagging as
-  vectorized pandas/Arrow UDFs (regex-heavy, Python-side by necessity),
+  vectorized pandas kernels (regex-heavy, Python-side by necessity; run
+  inside the enrich ``mapInPandas`` pass of :mod:`gipspark.plans.pipeline`),
   plus JVM-side text-analysis Columns (token counts, quality, lang-id,
   fingerprints) that never leave whole-stage codegen.
 - :mod:`gipspark.functions.cells` — S2/H3 cell indexing pandas UDFs over
@@ -27,9 +28,7 @@ from gipspark.functions.cells import (  # noqa: F401
 )
 from gipspark.functions.text import (  # noqa: F401
     doc_fingerprint,
-    extract_text_udf,
     extract_text_py,
-    geotag_udf,
     lang_id,
     quality_score,
     token_count,

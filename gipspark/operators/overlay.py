@@ -5,14 +5,14 @@ requires it; parcels×zones-style overlays do). Spark-first shape, same
 skeleton as the PIP join:
 
 1. **Prefilter** (JVM): each side's polygons get an S2 cover at an
-   adaptive quantized level (operators.pip.choose_cover_level /
-   polygon_covers — guaranteed supersets of every cell touching the
-   polygon region). Because the two sides may cover at different
-   COVER_LEVELS, each cover row is exploded into its ancestor chain at
-   every quantized level (pure bit arithmetic, same parent math as
-   pip_join's probe side); the candidate set is the distinct
-   (a_id, b_id) pairs sharing any normalized cell. Shuffle is bounded
-   by cover-cell occupancy, never |A|×|B|.
+   adaptive quantized level (operators.pip.cover_table — guaranteed
+   supersets of every cell touching the polygon region). Because the
+   two sides may cover at different COVER_LEVELS, each cover row is
+   exploded into its ancestor chain at every quantized level (pure bit
+   arithmetic, same parent math as pip_join's probe side); the
+   candidate set is the distinct (a_id, b_id) pairs sharing any
+   normalized cell. Shuffle is bounded by cover-cell occupancy, never
+   |A|×|B|.
 2. **Refine** (JVM codegen, no Python): polygons intersect under the
    house rule iff (a) some edge of A properly crosses some edge of B
    (strict orientation-sign test — nested array `exists` over the two
@@ -34,12 +34,11 @@ tests per candidate pair with no shuffle beyond the candidate join.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gipspark.geo import pip as pipgeo
-from gipspark.operators.pip import COVER_LEVELS, choose_cover_level, polygon_covers
+from gipspark.operators.pip import COVER_LEVELS, choose_cover_level, cover_table
 
 _EDGES_T = "array<struct<x1:double,y1:double,x2:double,y2:double>>"
 
@@ -49,16 +48,8 @@ def _side_dfs(
 ) -> tuple[DataFrame, DataFrame]:
     """(cover_df, shape_df) for one side. cover: (cell, {prefix}_id) at
     each polygon's adaptive level. shape: ({prefix}_id, edges, vx, vy)."""
-    groups: dict[int, list[dict]] = {}
-    for p in polys:
-        rings = [np.asarray(r, dtype=np.float64) for r in p["rings"]]
-        groups.setdefault(choose_cover_level(rings), []).append(p)
-    cover_pd = pd.concat(
-        [polygon_covers(ps, lvl) for lvl, ps in sorted(groups.items())], ignore_index=True
-    )
-    cover = spark.createDataFrame(cover_pd, "__cell long, poly_id long").select(
-        F.col("__cell").alias("cell"), F.col("poly_id").alias(f"{prefix}_id")
-    )
+    _, cover = cover_table(spark, polys)
+    cover = cover.select(F.col("__cell").alias("cell"), F.col("poly_id").alias(f"{prefix}_id"))
     shape_rows = [
         (
             int(p["poly_id"]),

@@ -10,11 +10,11 @@ Shapely-prepared polygon partitions)"). Spark-first shape:
    big point side equi-joins on its already-computed cell id, so the
    10^12-row scan never shuffles for this join and Catalyst pushes the
    cell computation/pruning into the scan stage.
-2. **Refine** (Arrow batch → NumPy): candidate (point, poly) pairs run
-   the exact even-odd ray cast (gipspark.geo.pip) in a vectorized
-   pandas UDF; polygon edge arrays ride to executors inside the UDF
-   closure (same role as the reference's Shapely *prepared* polygons —
-   preprocessed once, reused per batch).
+2. **Refine** (JVM codegen, no Python): candidate (point, poly) pairs
+   run the exact even-odd ray cast (the gipspark.geo.pip rule) as an
+   ``aggregate`` fold over a broadcast edges array per polygon (same
+   role as the reference's Shapely *prepared* polygons — preprocessed
+   once, reused per row).
 
 Scale notes: the broadcast cover is |polys|·|cover| rows (thousands) —
 tiny; refine cost is proportional to candidates only, and candidates
@@ -27,10 +27,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType, LongType, StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from gipspark.functions.cells import s2_cell
 from gipspark.geo import pip as pipgeo
@@ -44,6 +43,8 @@ _COVER_CACHE: dict = {}
 
 COVER_LEVELS = (6, 9, 12)  # quantized cover levels — bounds the probe
 # amplification of the single prefilter join to |COVER_LEVELS| rows/point
+
+CELL_LEVEL = 12  # S2 level of a caller's ``cell_col`` (the enrich encode)
 
 
 def choose_cover_level(rings: list[np.ndarray]) -> int:
@@ -80,11 +81,22 @@ def polygon_covers(polys: list[dict], level: int) -> pd.DataFrame:
     )
 
 
-def _edges_by_pid(polys: list[dict]) -> dict[int, np.ndarray]:
-    return {
-        p["poly_id"]: pipgeo.rings_to_edges([np.asarray(r, dtype=np.float64) for r in p["rings"]])
-        for p in polys
-    }
+def cover_table(
+    spark: SparkSession, polys: list[dict], level: int | None = None
+) -> tuple[list[int], DataFrame]:
+    """(sorted cover levels used, (__cell, poly_id) DataFrame): each
+    polygon covered at ``level``, or at its choose_cover_level when
+    ``level`` is None. Cell ids self-describe their level, so the
+    per-level covers share one table without collisions."""
+    groups: dict[int, list[dict]] = {}
+    for p in polys:
+        lvl = level if level is not None else choose_cover_level(
+            [np.asarray(r, dtype=np.float64) for r in p["rings"]]
+        )
+        groups.setdefault(lvl, []).append(p)
+    levels = sorted(groups)
+    cover_pd = pd.concat([polygon_covers(groups[lvl], lvl) for lvl in levels], ignore_index=True)
+    return levels, spark.createDataFrame(cover_pd, COVER_SCHEMA)
 
 
 def pip_join(
@@ -94,25 +106,21 @@ def pip_join(
     lon_col: str = "lon",
     level: int | None = None,
     cell_col: str | None = None,
-    cell_level: int = 12,
-    keep_all_points: bool = False,
-    refine: str = "jvm",
 ) -> DataFrame:
-    """points ⋈ polygons → points' columns + ``poly_id``.
+    """points ⋈ polygons (inner) → points' columns + ``poly_id``.
 
     ``polys``: list of {poly_id, rings} dicts (rings = [[lon,lat]...]).
     ``level``: force one cover level; default picks one per polygon
-    (choose_cover_level) and unions per-level prefilter joins — one
-    shuffle-free broadcast join per distinct level (≤3 in practice).
-    ``cell_col``/``cell_level``: reuse an existing S2 cell column for
-    the group at that level (encode-once pipelines).
-    ``keep_all_points``: left join semantics (unmatched → poly_id null).
-    ``refine``: "jvm" (default) runs the even-odd ray cast as a
-    whole-stage-codegen `aggregate` over a broadcast edges array — the
-    pipeline then has ONE python stage (the enrich pass) instead of
-    two; "pandas" keeps the NumPy kernel (identical rule; equality
-    property-tested), useful as an oracle and for polygons so large
-    that per-row edge arrays stop fitting a broadcast row.
+    (choose_cover_level) and probes every distinct level through one
+    shuffle-free broadcast join (≤3 levels in practice).
+    ``cell_col``: an existing S2 ``CELL_LEVEL`` cell column to derive
+    the probe cells from (encode-once pipelines) instead of encoding
+    (lat, lon) again.
+
+    The refine runs the even-odd ray cast as a whole-stage-codegen
+    ``aggregate`` over a broadcast edges array, so the join adds no
+    Python stage to the plan. A left join is the caller's: join this
+    result back to the points on a key.
 
     Polygons crossing the ±180° meridian are split into in-strip
     pieces first (geo/antimeridian.py; a no-op when nothing wraps) —
@@ -124,27 +132,18 @@ def pip_join(
     if len({p["poly_id"] for p in polys}) != len(polys):
         raise ValueError("pip_join: poly_id values must be unique")
     polys = normalize_antimeridian(polys)
-    edges = _edges_by_pid(polys)
+    levels, cover = cover_table(spark, polys, level)
 
-    # group polygons by cover level
-    groups: dict[int, list[dict]] = {}
-    for p in polys:
-        lvl = level if level is not None else choose_cover_level(
-            [np.asarray(r, dtype=np.float64) for r in p["rings"]]
-        )
-        groups.setdefault(lvl, []).append(p)
-
-    # ONE pandas-UDF encode at the finest needed level; each point then
-    # explodes into its parent cell at every active cover level via the
-    # S2 parent bit trick ((cell & ~(lsb-1)) | lsb) — pure JVM bitwise
+    # ONE encode at the finest needed level; each point then explodes
+    # into its parent cell at every active cover level via the S2
+    # parent bit trick ((cell & ~(lsb-1)) | lsb) — pure JVM bitwise
     # arithmetic — and ONE broadcast equi-join probes the combined
-    # multi-level cover (cell ids self-describe their level, so there
-    # are no cross-level collisions). Single branch, single Python pass,
-    # |levels|× probe amplification, no shuffle.
-    finest = max(groups)
+    # multi-level cover. Single branch, |levels|× probe amplification,
+    # no shuffle.
+    finest = levels[-1]
     pts = points
-    if cell_col is not None and cell_level >= finest:
-        base, base_lvl = cell_col, cell_level
+    if cell_col is not None and CELL_LEVEL >= finest:
+        base, base_lvl = cell_col, CELL_LEVEL
     else:
         base, base_lvl = "__cellbase", finest
         pts = pts.withColumn(base, s2_cell(F.col(lat_col), F.col(lon_col), finest))
@@ -158,71 +157,50 @@ def pip_join(
             mask -= 1 << 64
         return F.col(base).bitwiseAND(F.lit(mask)).bitwiseOR(F.lit(lsb))
 
-    cover_pd = pd.concat(
-        [polygon_covers(ps, lvl) for lvl, ps in sorted(groups.items())], ignore_index=True
-    )
-    cover = spark.createDataFrame(cover_pd, COVER_SCHEMA)
-    probe = pts.withColumn(
-        "__pcell", F.explode(F.array(*[parent_expr(lvl) for lvl in sorted(groups)]))
-    )
+    probe = pts.withColumn("__pcell", F.explode(F.array(*[parent_expr(lvl) for lvl in levels])))
     cand = probe.join(
         F.broadcast(cover.withColumnRenamed("__cell", "__pcell")), on="__pcell", how="inner"
     ).select(*points.columns, "poly_id")
 
-    if refine == "jvm":
-        # edges ride as a broadcast (poly_id → array<struct>) dim; the
-        # crossing rule below is the VERBATIM pipgeo.points_in_polygon
-        # rule (and the DuckDB oracle's): straddle test first, so the
-        # xcross division only matters when y2 != y1. Spark's non-ANSI
-        # Divide returns NULL on a zero divisor (not IEEE inf/nan), and
-        # three-valued AND short-circuits `false AND NULL` to false —
-        # the straddle gate is false exactly when y1 == y2, so the NULL
-        # never escapes. NB: under spark.sql.ansi.enabled=true the
-        # division would raise instead; gate horizontal edges explicitly
-        # before enabling ANSI mode.
-        edges_rows = [
-            (
-                int(pid),
-                [(float(x1), float(y1), float(x2), float(y2)) for x1, y1, x2, y2 in arr],
-            )
-            for pid, arr in edges.items()
-        ]
-        edges_df = spark.createDataFrame(
-            edges_rows,
-            "poly_id long, __edges array<struct<x1:double,y1:double,x2:double,y2:double>>",
+    # edges ride as a broadcast (poly_id → array<struct>) dim; the
+    # crossing rule below is the VERBATIM pipgeo.points_in_polygon rule
+    # (and the DuckDB oracle's): straddle test first, so the xcross
+    # division only matters when y2 != y1. Spark's non-ANSI Divide
+    # returns NULL on a zero divisor (not IEEE inf/nan), and
+    # three-valued AND short-circuits `false AND NULL` to false — the
+    # straddle gate is false exactly when y1 == y2, so the NULL never
+    # escapes. NB: under spark.sql.ansi.enabled=true the division would
+    # raise instead; gate horizontal edges explicitly before enabling
+    # ANSI mode.
+    edges_rows = [
+        (
+            int(p["poly_id"]),
+            [
+                (float(x1), float(y1), float(x2), float(y2))
+                for x1, y1, x2, y2 in pipgeo.rings_to_edges(
+                    [np.asarray(r, dtype=np.float64) for r in p["rings"]]
+                )
+            ],
         )
-        lon_c, lat_c = F.col(lon_col), F.col(lat_col)
-        crossings = F.aggregate(
-            F.col("__edges"),
-            F.lit(0),
-            lambda acc, e: acc
-            + F.when(
-                ((e.y1 > lat_c) != (e.y2 > lat_c))
-                & (lon_c < (e.x2 - e.x1) * (lat_c - e.y1) / (e.y2 - e.y1) + e.x1),
-                1,
-            ).otherwise(0),
-        )
-        matched = (
-            cand.join(F.broadcast(edges_df), "poly_id")
-            .filter(crossings % 2 == 1)
-            .select(*points.columns, "poly_id")
-        )
-    else:
-
-        @pandas_udf(BooleanType())
-        def _refine(lon: pd.Series, lat: pd.Series, pid: pd.Series) -> pd.Series:
-            out = np.zeros(len(lon), dtype=bool)
-            lo = lon.to_numpy(np.float64)
-            la = lat.to_numpy(np.float64)
-            pids = pid.to_numpy(np.int64)
-            for p in np.unique(pids):
-                m = pids == p
-                out[m] = pipgeo.points_in_polygon_batched(lo[m], la[m], edges[int(p)])
-            return pd.Series(out)
-
-        matched = cand.filter(_refine(F.col(lon_col), F.col(lat_col), F.col("poly_id")))
-    if not keep_all_points:
-        return matched
-    return points.join(
-        matched.select(*points.columns, "poly_id"), on=points.columns, how="left"
+        for p in polys
+    ]
+    edges_df = spark.createDataFrame(
+        edges_rows,
+        "poly_id long, __edges array<struct<x1:double,y1:double,x2:double,y2:double>>",
+    )
+    lon_c, lat_c = F.col(lon_col), F.col(lat_col)
+    crossings = F.aggregate(
+        F.col("__edges"),
+        F.lit(0),
+        lambda acc, e: acc
+        + F.when(
+            ((e.y1 > lat_c) != (e.y2 > lat_c))
+            & (lon_c < (e.x2 - e.x1) * (lat_c - e.y1) / (e.y2 - e.y1) + e.x1),
+            1,
+        ).otherwise(0),
+    )
+    return (
+        cand.join(F.broadcast(edges_df), "poly_id")
+        .filter(crossings % 2 == 1)
+        .select(*points.columns, "poly_id")
     )

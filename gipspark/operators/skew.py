@@ -53,17 +53,14 @@ def salted_hybrid_join(
     n_salt: int = 16,
     hot_threshold: float = 0.01,
     sample: float | None = None,
-    how: str = "inner",
 ) -> DataFrame:
-    """big ⋈ small on ``key`` with hot-key broadcast + cold-key salting.
+    """big ⋈ small (inner) on ``key`` with hot-key broadcast + cold-key
+    salting.
 
     ``small`` is the build side: small enough to broadcast per hot key
     and to replicate n_salt× for the cold path (dimension-sized — for
     the engine this is polygon covers / tile dims, thousands of rows).
-    Only inner/left supported (left: unmatched big rows resurface via
-    an anti-join union).
     """
-    assert how in ("inner", "left")
     hot = hot_keys(big, key, hot_threshold, sample)
 
     big_hot = big.filter(F.col(key).isin(hot)) if hot else None
@@ -87,20 +84,14 @@ def salted_hybrid_join(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    if how == "left":
-        matched_keys = small.select(key).distinct()
-        unmatched = big.join(matched_keys, on=key, how="left_anti")
-        for c in out.columns:
-            if c not in unmatched.columns:
-                unmatched = unmatched.withColumn(c, F.lit(None))
-        out = out.unionByName(unmatched.select(out.columns))
     return out
 
 
-def cluster_by_cell(df: DataFrame, cell_col: str = "cell", partitions: int | None = None) -> DataFrame:
+def cluster_by_cell(df: DataFrame, cell_col: str = "cell") -> DataFrame:
     """Output layout contract: repartitionByRange + sortWithinPartitions
-    on cell id (BASELINE.json:6) — range partitions give downstream
-    scans partition pruning on cell ranges and keep spatially-near rows
-    co-located; AQE rebalances ragged ranges."""
-    parts = partitions or df.sparkSession.sparkContext.defaultParallelism * 2
+    on cell id (BASELINE.json:6) into 2× default-parallelism ranges —
+    range partitions give downstream scans partition pruning on cell
+    ranges and keep spatially-near rows co-located; AQE rebalances
+    ragged ranges."""
+    parts = df.sparkSession.sparkContext.defaultParallelism * 2
     return df.repartitionByRange(parts, F.col(cell_col)).sortWithinPartitions(cell_col)

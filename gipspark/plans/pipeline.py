@@ -4,8 +4,8 @@ tile assign → clustered write, checkpointed per stage.
 This is the BASELINE.json:2 benchmark subject ("H3-encode + PIP-join +
 tile-assign … docs/sec end-to-end") and the resume demonstration
 (BASELINE.json:6). Each stage is a declarative DataFrame; Python is
-crossed exactly twice per row batch (extract+geotag UDF pass, encode
-UDF pass) — everything else is whole-stage codegen.
+crossed exactly once per row batch (the enrich ``mapInPandas`` pass) —
+everything else, the PIP refine included, is whole-stage codegen.
 
 Stage list (names are manifest keys — stable across runs):
   s1_enrich   html → text', (lat,lon), s2/h3 cells, tile  [one fused
@@ -16,72 +16,42 @@ Stage list (names are manifest keys — stable across runs):
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
-from gipspark.functions.cells import h3_cell, s2_cell, tile_of
-from gipspark.functions.text import extract_text_udf, geotag_udf
-from gipspark.operators.pip import pip_join
+from gipspark.functions.cells import tile_of
+from gipspark.functions.text import extract_text_series, geotag_frame
+from gipspark.geo import h3x, s2
+from gipspark.operators.pip import CELL_LEVEL, pip_join
 from gipspark.operators.skew import cluster_by_cell
 from gipspark.sources.checkpoint import CheckpointedRun
 
 
-def enrich_docs(docs: DataFrame, fused: bool = True, keep_html: bool = False) -> DataFrame:
+def enrich_docs(docs: DataFrame) -> DataFrame:
     """scan → extract/geotag → encode (bench hot path).
 
-    ``fused=True`` (default): ONE ``mapInPandas`` pass does extraction,
-    geotagging and both cell encodes — a single Arrow transfer of html
-    and a single Python worker pool. The unfused path chains 4 scalar
-    pandas UDFs, which Spark plans as stacked ArrowEvalPython nodes,
-    each with its own worker pool per core — measured 3× *slower* at
-    local[32] than local[8] from pure worker thrash (BENCH notes).
-    The fused plan is also what a 1000-executor run wants: narrow, no
-    shuffle, one python process per task slot.
+    ONE ``mapInPandas`` pass does extraction, geotagging and both cell
+    encodes (S2 ``CELL_LEVEL`` ``cell``, H3 res-7 ``h3cell``; both null
+    where the doc has no geotag) — a single Arrow transfer of html and
+    a single Python worker pool. Chained scalar pandas UDFs would plan
+    as stacked ArrowEvalPython nodes, each with its own worker pool per
+    core — measured 3× *slower* at local[32] than local[8] from pure
+    worker thrash (BENCH notes). The fused plan is also what a
+    1000-executor run wants: narrow, no shuffle, one python process per
+    task slot.
 
-    ``keep_html=False`` (default) drops the html payload from the
-    output: the bytes must cross INTO Python once (they are the input),
-    but shipping them back out through Arrow — and through every
-    downstream exchange — doubles the pipeline's byte volume for a
-    column nothing downstream reads.
+    The html payload is dropped from the output: the bytes must cross
+    INTO Python once (they are the input), but shipping them back out
+    through Arrow — and through every downstream exchange — doubles the
+    pipeline's byte volume for a column nothing downstream reads.
     """
-    if not fused:
-        g = docs.withColumn("__geo", geotag_udf(F.col("html"))).withColumn(
-            "text_extracted", extract_text_udf(F.col("html"))
-        )
-        g = (
-            g.withColumn("lat", F.col("__geo.lat"))
-            .withColumn("lon", F.col("__geo.lon"))
-            .drop("__geo")
-        )
-        geocoded = F.col("lat").isNotNull()
-        out = (
-            g.withColumn("cell", s2_cell(F.col("lat"), F.col("lon"), 12))
-            .withColumn("h3cell", h3_cell(F.col("lat"), F.col("lon"), 7))
-            .withColumn(
-                "tile_id",
-                F.when(geocoded, tile_of(F.col("lat"), F.col("lon"))).otherwise(F.lit(None)),
-            )
-        )
-        return out if keep_html else out.drop("html")
-
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from gipspark.functions.text import extract_text_series, geotag_frame
-    from gipspark.geo import h3x, s2
-
-    out_fields = [f for f in docs.schema.fields if keep_html or f.name != "html"]
     out_schema = StructType(
-        out_fields
+        [f for f in docs.schema.fields if f.name != "html"]
         + [
             StructField("text_extracted", StringType()),
             StructField("lat", DoubleType()),
@@ -102,31 +72,22 @@ def enrich_docs(docs: DataFrame, fused: bool = True, keep_html: bool = False) ->
                 else v
             )
             geo = geotag_frame(html_s)
-            text = extract_text_series(html_s)
-            if not keep_html:
-                b = b.drop(columns=["html"])
-            b = b.assign(
-                text_extracted=text,
-                lat=geo["lat"].to_numpy(),
-                lon=geo["lon"].to_numpy(),
-            )
             m = geo["lat"].notna().to_numpy()
-            cell = np.full(len(b), np.nan)
-            h3c = np.full(len(b), np.nan)
+            # ids stay int64 end to end: H3 ids do not fit a float64
+            cell = np.zeros(len(b), np.int64)
+            h3c = np.zeros(len(b), np.int64)
             if m.any():
                 la = geo["lat"].to_numpy(np.float64)[m]
                 lo = geo["lon"].to_numpy(np.float64)[m]
-                cell[m] = s2.latlng_to_cell(la, lo, 12)
+                cell[m] = s2.latlng_to_cell(la, lo, CELL_LEVEL)
                 h3c[m] = h3x.latlng_to_cell(la, lo, 7)
-            b = b.assign(
-                cell=pd.array(
-                    np.where(m, cell, 0).astype(np.int64), dtype="Int64"
-                ),
-                h3cell=pd.array(np.where(m, h3c, 0).astype(np.int64), dtype="Int64"),
+            yield b.drop(columns=["html"]).assign(
+                text_extracted=extract_text_series(html_s),
+                lat=geo["lat"].to_numpy(),
+                lon=geo["lon"].to_numpy(),
+                cell=pd.arrays.IntegerArray(cell, ~m),
+                h3cell=pd.arrays.IntegerArray(h3c, ~m),
             )
-            b.loc[~m, "cell"] = pd.NA
-            b.loc[~m, "h3cell"] = pd.NA
-            yield b
 
     enriched = docs.mapInPandas(run, out_schema)
     geocoded = F.col("lat").isNotNull()

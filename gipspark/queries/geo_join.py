@@ -80,9 +80,8 @@ FROM pts p LEFT JOIN m ON p.c_custkey = m.c_custkey
 )
 def pip_left_join_coverage(spark, sf_dir):
     pts = _cust_pts(spark, sf_dir).filter(F.col("c_custkey") < 400)
-    return pip_join(pts, ORACLE_POLYGONS, level=7, keep_all_points=True).select(
-        "c_custkey", "poly_id"
-    )
+    m = pip_join(pts, ORACLE_POLYGONS, level=7).select("c_custkey", "poly_id")
+    return pts.select("c_custkey").join(m, on="c_custkey", how="left")
 
 
 

@@ -7,6 +7,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from gipspark.functions.cells import derived_lat, derived_lon
+from gipspark.geo import h3x, s2
 from gipspark.geo import pip as pipgeo
 from gipspark.operators.asof import asof_join, range_join
 from gipspark.operators.dedup import exact_dedup, jaccard_topk, minhash_lsh_pairs
@@ -34,6 +35,31 @@ def test_pip_join_equals_brute_force(spark):
         want |= {(u, p["poly_id"]) for u in pdf.url.values[ins]}
     assert got == want
     assert len(got) > 0
+
+
+def test_enrich_cells_exact_and_one_python_pass(spark, tmp_path):
+    # read back from parquet so the fixture generator's own Python pass
+    # is not in the plan (the bench input is parquet too)
+    docs_df(spark, 2000).write.parquet(str(tmp_path / "docs"))
+    enr = enrich_docs(spark.read.parquet(str(tmp_path / "docs")))
+    rows = enr.select("lat", "lon", "cell", "h3cell").collect()
+    geo = [r for r in rows if r.lat is not None]
+    assert 0 < len(geo) < len(rows)
+    assert all(r.cell is None and r.h3cell is None for r in rows if r.lat is None)
+    lat = np.array([r.lat for r in geo])
+    lon = np.array([r.lon for r in geo])
+    assert [r.cell for r in geo] == s2.latlng_to_cell(lat, lon, 12).tolist()
+    assert [r.h3cell for r in geo] == h3x.latlng_to_cell(lat, lon, 7).tolist()
+
+    # the whole flagship chain crosses into Python once: the enrich pass
+    tiles = (
+        pip_join(enr.filter(F.col("lat").isNotNull()), polygons(30), cell_col="cell")
+        .groupBy("tile_id", "poly_id")
+        .count()
+    )
+    plan = spark._jvm.PythonSQLUtils.explainString(tiles._jdf.queryExecution(), "simple")
+    assert plan.count("MapInPandas") == 1
+    assert "ArrowEvalPython" not in plan
 
 
 def test_pip_join_rejects_duplicate_ids(spark):

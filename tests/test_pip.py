@@ -125,23 +125,3 @@ def test_cover_superset_at_coarse_levels():
         inside = pip.points_in_polygon(lon, lat, edges)
         cells = set(s2.latlng_to_cell(lat[inside], lon[inside], level).tolist())
         assert cells <= cover, f"level {level}: {len(cells - cover)} cells escaped"
-
-
-def test_jvm_refine_equals_pandas_refine(spark):
-    from pyspark.sql import functions as F
-
-    from gipspark.operators.pip import pip_join
-    from gipspark.plans.pipeline import enrich_docs
-    from gipspark.sources.fixtures import docs_df, polygons
-
-    enr = enrich_docs(docs_df(spark, 3000)).filter(F.col("lat").isNotNull())
-    polys = polygons(40)
-    jvm = {
-        (r.url, r.poly_id)
-        for r in pip_join(enr, polys, cell_col="cell", refine="jvm").select("url", "poly_id").collect()
-    }
-    pdu = {
-        (r.url, r.poly_id)
-        for r in pip_join(enr, polys, cell_col="cell", refine="pandas").select("url", "poly_id").collect()
-    }
-    assert jvm == pdu and len(jvm) > 0
